@@ -31,10 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gmall_realtime_flink_spark.operators.lineage import (
-    cut_lineage,
-    cut_lineage_eager,
-)
+from gmall_realtime_flink_spark.operators.lineage import cut_lineage
 
 NUM_HASHES = 8
 ROWS_PER_BAND = 2  # 8 hashes -> 4 bands of 2
@@ -486,14 +483,14 @@ def star_contraction(
     cur = (
         edges.filter(F.col("u") != F.col("v"))
         .distinct()
-        .transform(cut_lineage_eager)
+        .transform(cut_lineage, eager=True)
     )
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
         nxt = (
             _small_star(_large_star(cur))
-            .transform(cut_lineage_eager)
+            .transform(cut_lineage, eager=True)
         )
         # fixed-point test in ONE action (r13; was count + count +
         # subtract = 3 actions and a two-sided exchange): both sides
@@ -585,9 +582,11 @@ def connected_components(
     edges = (
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .transform(cut_lineage_eager)
+        .transform(cut_lineage, eager=True)
     )
-    labels = nodes.select("id", F.col("id").alias("comp")).transform(cut_lineage_eager)
+    labels = nodes.select("id", F.col("id").alias("comp")).transform(
+        cut_lineage, eager=True
+    )
     for _ in range(max_iter):
         nbr = edges.join(labels, edges["dst"] == labels["id"]).select(
             F.col("src").alias("id"), "comp"
@@ -596,7 +595,7 @@ def connected_components(
             labels.unionByName(nbr)
             .groupBy("id")
             .agg(F.min("comp").alias("comp"))
-            .transform(cut_lineage_eager)
+            .transform(cut_lineage, eager=True)
         )
         changed = (
             new_labels.alias("n")

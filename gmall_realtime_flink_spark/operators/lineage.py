@@ -1,11 +1,11 @@
-"""Lineage-cut helper with a production-reliability knob.
+"""Lineage-cut helper with a production-reliability setting.
 
 The engine cuts lineage wherever one intermediate feeds several
 consumers (or an iterative loop would otherwise embed every prior
 round's plan): without the cut, Spark re-executes the whole upstream
-pipeline once per consumer inside a single action (guide §5 —
-`localCheckpoint()` is the cheap way to truncate lineage when fault
-tolerance of that intermediate is not critical).
+pipeline once per consumer inside a single action. `localCheckpoint()`
+is the cheap way to truncate lineage when fault tolerance of that
+intermediate is not critical.
 
 `localCheckpoint` stores the partitions on executor-local block
 storage with NO replication and TRUNCATES lineage — losing an executor
@@ -16,18 +16,19 @@ process, nothing to lose) and wrong on a preemptible 100 TB cluster,
 where every cut point is an availability liability.
 
 `cut_lineage` is therefore the single switch: by default it is exactly
-`localCheckpoint(eager=...)`; with ``SPARK_GRAFT_CHECKPOINT=reliable``
-it becomes a reliable ``checkpoint(eager=...)`` into
-``SPARK_GRAFT_CHECKPOINT_DIR`` (or a per-session temp dir), which
-survives executor loss at the cost of one write+read of the cut frame
-through the checkpoint filesystem. Row-identity of the two forms is
-pinned by ``tests/test_plans.py::test_reliable_checkpoint_knob``.
+`localCheckpoint(eager=...)`; when ``SPARK_GRAFT_CHECKPOINT_DIR`` is
+set it becomes a reliable ``checkpoint(eager=...)`` into that
+directory, which survives executor loss at the cost of one write+read
+of the cut frame. The directory is the deployment's shared filesystem
+path (HDFS, S3, a network mount); there is no node-local fallback,
+because a checkpoint on one node's disk does not survive that node.
+Row-identity of the two forms is pinned by
+``tests/test_plans.py::test_reliable_checkpoint_knob``.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame
 
@@ -42,18 +43,10 @@ def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     invocation always recomputes from the source tables (the
     no-cross-run-caching rule). ``eager=True`` is for iterative driver
     loops that materialize per round by design."""
-    if os.environ.get("SPARK_GRAFT_CHECKPOINT", "local") == "reliable":
+    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    if ckpt_dir:
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(
-                os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-                or tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-            )
+            sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
-
-
-def cut_lineage_eager(df: DataFrame) -> DataFrame:
-    """`cut_lineage(df, eager=True)` in `.transform(...)`-friendly
-    form — for iterative driver loops that materialize per round."""
-    return cut_lineage(df, eager=True)

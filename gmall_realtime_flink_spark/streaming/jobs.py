@@ -150,33 +150,9 @@ def events_with_sentinel(
     else:
         max_ns = raw_max  # legacy layout: already nanos
     tmp = tempfile.mkdtemp(prefix="events_stream_")
-    # Steady-flow replay (topology latency measurement): stage the
-    # table as K TIME-ORDERED slices instead of one file, so a
-    # file-per-trigger consumer sees the arrival pattern a live topic
-    # gives — monotone event time across batches, which is the
-    # contract the 0-second watermarks encode. events.parquet is
-    # ts-sorted by construction, so row-slices are time-slices.
-    # mtimes are spaced so the file source's oldest-first order equals
-    # slice order even on coarse filesystem clocks.
-    slices = int(os.environ.get("SPARK_GRAFT_TOPOLOGY_EVENT_SLICES", "0"))
-    if slices > 1:
-        import time as _time
-
-        tbl = pq.read_table(src)
-        n = tbl.num_rows
-        now = _time.time()
-        for i in range(slices):
-            lo = i * n // slices
-            hi = (i + 1) * n // slices
-            p = os.path.join(tmp, f"part-{i:03d}.parquet")
-            pq.write_table(tbl.slice(lo, hi - lo), p)
-            os.utime(p, (now - 2 * (slices - i) - 2,) * 2)
-        last = slices
-    else:
-        os.symlink(src, os.path.join(tmp, "part-000.parquet"))
-        last = 1
+    os.symlink(src, os.path.join(tmp, "part-000.parquet"))
     write_sentinel_file(
-        os.path.join(tmp, f"part-{last:03d}-sentinel.parquet"),
+        os.path.join(tmp, "part-001-sentinel.parquet"),
         max(max_ns + 2 * gap_ms * 1_000_000, SENTINEL_TS_NS),
         ts_type=ts_type,
     )

@@ -89,41 +89,28 @@ def _write_batch_many(
     batch_df: DataFrame,
     batch_id: int,
     sinks: list[tuple],
+    ordered: bool,
     rebalance: bool = False,
 ) -> None:
     """Persist one micro-batch and run its per-sink writes as
-    CONCURRENT Spark jobs (one thread each). `sinks` is a list of
+    concurrent Spark jobs, one thread each. `sinks` is a list of
     (transform_fn, out_dir); each transform derives its sink's rows
-    from the SHARED persisted batch.
+    from the shared persisted batch, so the source is scanned once and
+    one sink's compute overlaps another's parquet encode (wall = max
+    of the sinks, not their sum). The scheduler is thread-safe, and
+    exceptions re-raise in the caller through future.result, so the
+    crash-injection seam and foreachBatch failure semantics hold.
 
-    Why concurrent: the DWD fan-out jobs write 2-3 independent layer
-    sinks per batch; serially, each write's tail is a single-task
-    parquet encode (the ordered-replay one-file-per-batch contract),
-    during which 31 cores idle — measured at sf1 ordered
-    (PROFILE_BASE_DB_SF1): per-trigger cost is ~98% addBatch, and the
-    sinks' compute+encode phases simply sum. Submitting the jobs from
-    threads lets sink B's parallel compute overlap sink A's
-    single-task encode — same jobs, same outputs, wall = max not sum.
-    Thread-per-job is the standard Spark concurrent-job pattern
-    (scheduler is thread-safe; FIFO pool). Exceptions re-raise in the
-    caller (future.result), so the crash-injection seam and
-    foreachBatch failure semantics are unchanged.
-
-    Why rebalance: in ordered replay each micro-batch is ONE staged
-    slice file, so the scan yields only a handful of byte-range
-    splits (measured: 5-6 tasks on 32 cores) and every derived
-    sink's compute — the CDC envelope's from_json parse, the costly
-    part — inherits that parallelism. `rebalance=True` repartitions
-    the batch to the session's shuffle parallelism BEFORE the persist
-    (one exchange, shared by all sinks), exactly the
-    rebalance-before-the-compute-bound-cross rule the kmeans path
-    documents. Only applied in steady-flow mode — a production giant
-    batch has plenty of scan splits and the exchange would be pure
-    cost."""
+    `rebalance=True` repartitions the batch to the session's shuffle
+    parallelism before the persist (one exchange shared by every
+    sink). It is for ordered replay, where each micro-batch is one
+    staged slice file that scans as a handful of splits, and every
+    sink's compute would inherit that parallelism; a bulk batch has
+    enough splits that the exchange is pure cost."""
     from concurrent.futures import ThreadPoolExecutor
 
     src = batch_df
-    if rebalance and os.environ.get("SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER"):
+    if rebalance:
         src = src.repartition(
             int(src.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         )
@@ -131,26 +118,13 @@ def _write_batch_many(
     try:
         with ThreadPoolExecutor(max_workers=len(sinks)) as ex:
             futs = [
-                ex.submit(_write_batch, fn(src), batch_id, out)
+                ex.submit(_write_batch, fn(src), batch_id, out, ordered)
                 for fn, out in sinks
             ]
             for f in futs:
                 f.result()
     finally:
         src.unpersist()
-
-
-def _manifest_mode() -> bool:
-    """Ordered replay with PARALLEL writers (VERDICT r12 item 3): when
-    SPARK_GRAFT_TOPOLOGY_MANIFESTS is set (alongside the steady-flow
-    FILES_PER_TRIGGER knob), every layer batch is written with full
-    task parallelism and followed by a per-batch ordered MANIFEST; the
-    downstream consumers trigger on manifests (one batch per trigger,
-    in batch order) and expand them to the batch's files inside the
-    trigger — so the single-task parquet-encode tail the writer-tasks
-    A/B isolated (r12: base_db_app 157.8 s at sf10) is gone while the
-    whole-batch-in-order replay contract is preserved."""
-    return bool(os.environ.get("SPARK_GRAFT_TOPOLOGY_MANIFESTS"))
 
 
 # per-layer monotone manifest mtimes: the consumer's file source
@@ -193,57 +167,29 @@ def _write_manifest(out_dir: str, batch_id: int) -> None:
     os.replace(tmp, path)
 
 
-def _write_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
+def _write_batch(
+    batch_df: DataFrame, batch_id: int, out_dir: str, ordered: bool
+) -> None:
     """Effectively-once layer write: foreachBatch is at-least-once (a
     crash between the parquet write and the offset commit replays the
     micro-batch), so every layer partition is keyed by batch_id and
     dynamically overwritten — a replayed batch replaces its OWN
     partition instead of appending duplicates. Same pattern as
-    streaming_dedup_minhash's admission sink (streaming/jobs.py)."""
+    streaming_dedup_minhash's admission sink (streaming/jobs.py).
+
+    Bulk replay writes the batch with whatever partitioning it has.
+    Ordered replay writes it with `defaultParallelism` tasks (enough
+    to hide the encode, not so many that each batch sprays tiny
+    files) and then publishes its manifest (_write_manifest): the
+    manifest, not the file count, carries the batch's atomicity and
+    order to the consumer."""
     out = batch_df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-    if os.environ.get("SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER"):
-        if _manifest_mode():
-            # manifest contract: writes keep real parallelism (the
-            # manifest, not the file count, carries batch atomicity
-            # and order to the consumer). WRITER_TASKS sizes the
-            # encode fan-out — enough tasks to hide the encode, not
-            # so many that every batch sprays tiny files.
-            out = out.repartition(
-                int(os.environ.get("SPARK_GRAFT_TOPOLOGY_WRITER_TASKS", "8"))
-            )
-        else:
-            # legacy steady-flow contract: ONE file per batch
-            # partition, so a downstream file-per-trigger consumer
-            # replays batches whole and in order. Splitting a
-            # multi-file batch partition across micro-batches hands a
-            # 0 s-watermark consumer files in arbitrary sub-order —
-            # rows older than the already-advanced watermark are
-            # dropped (W6 doing its job on input that broke the
-            # ordered-arrival contract; measured: chained
-            # visitor/province stats lose rows under
-            # maxFilesPerTrigger=4 without this).
-            #
-            # repartition(1), NOT coalesce(1): coalesce is a narrow
-            # dependency, so it pulls every upstream partition into
-            # the single writer task — the stateful join /
-            # applyInPandasWithState computation over all 32 state
-            # partitions then executes SERIALLY inside one task
-            # (measured at sf10 ordered replay: 1 of 32 cores busy,
-            # ~7 min per join batch). repartition inserts an
-            # exchange, so the stateful compute keeps its 32-way
-            # parallelism and only the file write is single-task.
-            #
-            # In THIS mode WRITER_TASKS>1 is profiling-only
-            # (tools/profile_base_db --writer-tasks): it breaks the
-            # one-file-per-batch contract; the manifest mode above is
-            # the production answer.
-            out = out.repartition(
-                int(os.environ.get("SPARK_GRAFT_TOPOLOGY_WRITER_TASKS", "1"))
-            )
+    if ordered:
+        out = out.repartition(out.sparkSession.sparkContext.defaultParallelism)
     out.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("batch_id").parquet(out_dir)
-    if _manifest_mode():
+    if ordered:
         _write_manifest(out_dir, batch_id)
     if FAULT_AFTER_WRITE is not None:
         FAULT_AFTER_WRITE(out_dir, batch_id)
@@ -284,12 +230,6 @@ class _BatchLatencyListener:
 
     def __init__(self) -> None:
         self.durations: dict[str, list[float]] = {}
-        # per-query per-batch durationMs component samples
-        # (queryPlanning / addBatch / walCommit / latestOffset /
-        # commitOffsets / getBatch) — the breakdown that says whether
-        # a slow micro-batch is COMPUTE (addBatch) or per-trigger
-        # FIXED cost (everything else); see tools/profile_base_db.py
-        self.components: dict[str, dict[str, list[float]]] = {}
         self._listener = None
 
     def attach(self, spark: SparkSession) -> None:
@@ -304,13 +244,9 @@ class _BatchLatencyListener:
             def onQueryProgress(self, event) -> None:
                 p = event.progress
                 name = p.name
-                dur = p.durationMs or {}
-                ms = dur.get("triggerExecution")
+                ms = (p.durationMs or {}).get("triggerExecution")
                 if name and ms is not None:
                     outer.durations.setdefault(name, []).append(float(ms))
-                    comp = outer.components.setdefault(name, {})
-                    for k, v in dur.items():
-                        comp.setdefault(k, []).append(float(v))
 
             def onQueryIdle(self, event) -> None:
                 pass
@@ -339,26 +275,11 @@ class _BatchLatencyListener:
         # a restart run against an already-built base processes no new
         # data for completed jobs and must not erase their stats
         out.update(
-            {
-                name: {
-                    **_percentiles(ms),
-                    # where each trigger spent its time: addBatch is
-                    # the batch's actual compute+write; the rest is
-                    # per-trigger fixed cost (planning, offset WAL,
-                    # source listing) — the split that says whether a
-                    # slow ordered replay needs a faster PLAN or
-                    # fewer TRIGGERS
-                    "components": {
-                        k: _percentiles(v)
-                        for k, v in self.components.get(name, {}).items()
-                    },
-                }
-                for name, ms in self.durations.items()
-            }
+            {name: _percentiles(ms) for name, ms in self.durations.items()}
         )
 
 
-def _run(stream_df: DataFrame, out_dir: str, ckpt: str) -> None:
+def _run(stream_df: DataFrame, out_dir: str, ckpt: str, ordered: bool) -> None:
     """One checkpointed job writing a layer directory (effectively-once
     via per-batch dynamic partition overwrite, _write_batch)."""
     import time as _time
@@ -366,7 +287,7 @@ def _run(stream_df: DataFrame, out_dir: str, ckpt: str) -> None:
     t0 = _time.time()
     q = (
         stream_df.writeStream.foreachBatch(
-            lambda b, bid: _write_batch(b, bid, out_dir)
+            lambda b, bid: _write_batch(b, bid, out_dir, ordered)
         )
         .queryName(os.path.basename(out_dir))
         .option("checkpointLocation", ckpt)
@@ -374,11 +295,15 @@ def _run(stream_df: DataFrame, out_dir: str, ckpt: str) -> None:
         .start()
     )
     q.awaitTermination()
-    _seed_empty_layer(stream_df.sparkSession, stream_df.schema, out_dir)
+    _seed_empty_layer(
+        stream_df.sparkSession, stream_df.schema, out_dir, ordered
+    )
     LAYER_SECONDS[os.path.basename(out_dir)] = round(_time.time() - t0, 1)
 
 
-def _seed_empty_layer(spark: SparkSession, schema, out_dir: str) -> None:
+def _seed_empty_layer(
+    spark: SparkSession, schema, out_dir: str, ordered: bool
+) -> None:
     """A layer that saw ZERO batches (empty upstream) must still be
     schema-probeable by its consumers — a Kafka topic with no messages
     still has a schema. Leave one zero-row footer-only file under a
@@ -398,7 +323,7 @@ def _seed_empty_layer(spark: SparkSession, schema, out_dir: str) -> None:
         .write.mode("append")
         .parquet(os.path.join(out_dir, "batch_id=-2"))
     )
-    if _manifest_mode():
+    if ordered:
         # manifest consumers see only manifested batches — publish
         # the seed partition too (zero data rows; order irrelevant)
         _write_manifest(out_dir, -2)
@@ -412,9 +337,9 @@ def _manifest_stream(spark: SparkSession, schema, path: str) -> DataFrame:
     watermark can never strand part of a batch behind a trigger
     boundary. The manifest rows expand to the batch's parquet files
     inside the trigger via mapInArrow (pyarrow reads the files
-    executor-side; repartition on path spreads the W files across W
-    tasks, restoring the read parallelism the parallel writer
-    produced). The Arrow batches are cast to the layer's exact Spark
+    executor-side; repartition on path spreads a batch's files over
+    `defaultParallelism` tasks, the same count _write_batch wrote them
+    with). The Arrow batches are cast to the layer's exact Spark
     schema so types round-trip bit-identically."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -427,7 +352,6 @@ def _manifest_stream(spark: SparkSession, schema, path: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .json(os.path.join(path, "_manifests"))
     )
-    w = int(os.environ.get("SPARK_GRAFT_TOPOLOGY_WRITER_TASKS", "8"))
 
     def expand(batches):
         import pyarrow.parquet as _pq
@@ -438,44 +362,36 @@ def _manifest_stream(spark: SparkSession, schema, path: str) -> DataFrame:
                 tbl = tbl.select(target.names).cast(target)
                 yield from tbl.to_batches()
 
-    return mf.repartition(w, "path").mapInArrow(expand, schema=data_schema)
+    return mf.repartition(
+        spark.sparkContext.defaultParallelism, "path"
+    ).mapInArrow(expand, schema=data_schema)
 
 
-def _reader(spark: SparkSession, schema, path: str):
-    """readStream with the optional steady-flow knob: when
-    SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER is set, every layer/fact
-    consumer processes at most that many files per micro-batch —
-    availableNow then replays the backlog as a SEQUENCE of small
-    batches instead of 1-2 giant ones, which is what makes the
-    per-batch latency percentiles (LAYER_BATCH_MS) a real steady-state
-    distribution rather than one sample. Unset (production default):
-    fewest, largest batches — lowest total cost.
-
-    Under the manifest contract (_manifest_mode), a directory that
-    carries per-batch manifests (i.e. a LAYER written by
-    _write_batch; the pre-staged ODS dirs don't) is consumed through
-    them instead — whole ordered batches per trigger with parallel
-    file reads. ODS dirs keep the plain file source: their staged
-    slice files are each internally time-sorted, so file-per-trigger
-    already IS the ordered contract there."""
-    if _manifest_mode() and os.path.isdir(os.path.join(path, "_manifests")):
+def _reader(
+    spark: SparkSession, schema, path: str, ordered: bool
+) -> DataFrame:
+    """readStream over a layer directory written by _write_batch. Bulk
+    replay takes every available file in one trigger (fewest, largest
+    batches: the lowest total cost). Ordered replay consumes the
+    layer through its per-batch manifests, one whole upstream batch
+    per trigger in batch order (_manifest_stream)."""
+    if ordered:
         return _manifest_stream(spark, schema, path)
-    r = spark.readStream.schema(schema)
-    mft = os.environ.get("SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER")
-    if mft:
-        r = r.option("maxFilesPerTrigger", int(mft))
-    return r.parquet(path)
+    return spark.readStream.schema(schema).parquet(path)
 
 
 def _layer_stream(
-    spark: SparkSession, layer_dir: str, ts_col: str | None = None
+    spark: SparkSession,
+    layer_dir: str,
+    ordered: bool,
+    ts_col: str | None = None,
 ) -> DataFrame:
     """readStream over a previously-written layer directory (the
     'consume the upstream job's topic' step). Schema probed from the
     written footers, event-time column re-derived where the layer
     stores it as a formatted string."""
     schema = spark.read.parquet(layer_dir).schema
-    df = _reader(spark, schema, layer_dir).drop("batch_id")
+    df = _reader(spark, schema, layer_dir, ordered).drop("batch_id")
     if ts_col is not None:
         df = df.withColumn("ts", F.to_timestamp(ts_col)).withWatermark(
             "ts", "0 seconds"
@@ -484,9 +400,30 @@ def _layer_stream(
 
 
 def build_warehouse_layers(
-    spark: SparkSession, sf_dir: str, base: str | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    base: str | None = None,
+    *,
+    ordered_slices: int = 0,
 ) -> dict[str, str]:
     """Run the full 10-job chained topology; returns layer name -> dir.
+
+    The DAG is replayed in one of two shapes; both produce the same
+    layer rows.
+
+    * Bulk (``ordered_slices=0``): each ODS fact table is staged as one
+      file and every consumer takes all available input per trigger —
+      fewest, largest micro-batches, the lowest total cost.
+    * Ordered (``ordered_slices=N>0``): the two ODS fact tables are
+      staged as N event-time-sorted slices, the monotone-ingest
+      contract of a per-key-ordered Kafka topic. Every reader takes
+      one slice file or one upstream batch manifest per trigger, so
+      availableNow replays the backlog as a sequence of small batches
+      in order: the 0 s watermarks advance every micro-batch, join
+      state evicts continuously, and the per-batch latency
+      percentiles (LAYER_BATCH_MS) describe a steady flow rather than
+      one giant batch. No row is ever behind the watermark, so the
+      results do not depend on N.
 
     See _build_warehouse_layers_impl for the layer DAG semantics. This
     wrapper owns the latency listener's lifecycle: detach runs in a
@@ -494,16 +431,20 @@ def build_warehouse_layers(
     leave the listener registered on the shared SparkSession, where it
     would accumulate durations and pay dispatch on every later query.
     """
+    if ordered_slices < 0:
+        raise ValueError(f"ordered_slices must be >= 0: {ordered_slices}")
     _latency = _BatchLatencyListener()
     _latency.attach(spark)
     try:
-        return _build_warehouse_layers_impl(spark, sf_dir, base)
+        return _build_warehouse_layers_impl(
+            spark, sf_dir, base, ordered_slices
+        )
     finally:
         _latency.detach_into(spark, LAYER_BATCH_MS)
 
 
 def _build_warehouse_layers_impl(
-    spark: SparkSession, sf_dir: str, base: str | None = None
+    spark: SparkSession, sf_dir: str, base: str | None, ordered_slices: int
 ) -> dict[str, str]:
     """The 10-job chained topology body (listener managed by caller).
 
@@ -523,6 +464,7 @@ def _build_warehouse_layers_impl(
     (The ODS staging dirs and the user_jump sentinel row are created
     once per base; on restart the recorded dirs are reused.)
     """
+    ordered = ordered_slices > 0
     if base is None:
         base = tempfile.mkdtemp(prefix="warehouse_")
     layers = {
@@ -576,27 +518,18 @@ def _build_warehouse_layers_impl(
 
     ods_manifest = os.path.join(base, "ods.json")
     if not os.path.exists(ods_manifest):
-        # SPARK_GRAFT_TOPOLOGY_ORDERED_SLICES=N stages the two fact
-        # tables as N event-time-sorted slices instead of one file —
-        # the monotone-ingest contract of a per-key-ordered Kafka
-        # topic. Combined with SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER
-        # this keeps the dwm join layers' watermark advancing every
-        # micro-batch, so join state evicts continuously (the 23x
-        # per-batch-p95 lever measured by JOIN_LATENCY_r09). Results
-        # are slicing-invariant: slices are time-sorted, so no row is
-        # ever behind the watermark (nothing drops). Default (unset):
-        # single-file staging, fewest/largest batches.
-        n_slices = os.environ.get("SPARK_GRAFT_TOPOLOGY_ORDERED_SLICES")
-        if n_slices:
+        # ordered replay stages the two fact tables as time-sorted
+        # slices (see build_warehouse_layers); bulk as one file each
+        if ordered:
             from gmall_realtime_flink_spark.streaming.jobs import (
                 stage_table_sorted_split,
             )
 
             stage_o = lambda: stage_table_sorted_split(  # noqa: E731
-                sf_dir, "orders", "o_orderdate", int(n_slices), _mut_o
+                sf_dir, "orders", "o_orderdate", ordered_slices, _mut_o
             )
             stage_l = lambda: stage_table_sorted_split(  # noqa: E731
-                sf_dir, "lineitem", "l_shipdate", int(n_slices), _mut_l
+                sf_dir, "lineitem", "l_shipdate", ordered_slices, _mut_l
             )
         else:
             stage_o = lambda: stage_table_with_sentinel(  # noqa: E731
@@ -643,6 +576,7 @@ def _build_warehouse_layers_impl(
                     layers["dwd_display_log"],
                 ),
             ],
+            ordered,
         )
 
     import time as _time
@@ -657,10 +591,8 @@ def _build_warehouse_layers_impl(
     )
     q.awaitTermination()
     for lyr in ("dwd_page_log", "dwd_start_log", "dwd_display_log"):
-        _seed_empty_layer(spark, events.schema, layers[lyr])
+        _seed_empty_layer(spark, events.schema, layers[lyr], ordered)
     LAYER_SECONDS["base_log_app"] = round(_time.time() - _t0, 1)
-    if os.environ.get("SPARK_GRAFT_TOPOLOGY_STOP_AFTER") == "base_log_app":
-        return layers  # profiling knob: isolate one DWD job's cost
 
     # ------------------------------------------------------------------
     # DWD job 2 — BaseDBApp: the CDC stream arrives as ONE envelope
@@ -669,8 +601,11 @@ def _build_warehouse_layers_impl(
     # directories (dynamic topic sink, :96-113).
     # ------------------------------------------------------------------
     def envelope(topic: str, schema: T.StructType) -> DataFrame:
-        raw = _reader(spark, schema, ods[topic])
-        return raw.select(
+        r = spark.readStream.schema(schema)
+        if ordered:
+            # one time-sorted slice per trigger: the ordered contract
+            r = r.option("maxFilesPerTrigger", 1)
+        return r.parquet(ods[topic]).select(
             F.lit(topic).alias("table"),
             F.to_json(F.struct("*")).alias("data"),
         )
@@ -698,9 +633,10 @@ def _build_warehouse_layers_impl(
                 )
                 for table, schema in table_schemas.items()
             ],
+            ordered,
             # the envelope's from_json is the batch's costly phase and
-            # a one-slice batch scans as only ~5 splits — rebalance
-            rebalance=True,
+            # a one-slice batch scans as only a few splits
+            rebalance=ordered,
         )
 
     _t0 = _time.time()
@@ -713,10 +649,8 @@ def _build_warehouse_layers_impl(
     )
     q.awaitTermination()
     for table, schema in table_schemas.items():
-        _seed_empty_layer(spark, schema, layers[f"dwd_{table}"])
+        _seed_empty_layer(spark, schema, layers[f"dwd_{table}"], ordered)
     LAYER_SECONDS["base_db_app"] = round(_time.time() - _t0, 1)
-    if os.environ.get("SPARK_GRAFT_TOPOLOGY_STOP_AFTER") == "base_db_app":
-        return layers  # profiling knob: isolate the DWD jobs' cost
 
     # ------------------------------------------------------------------
     # DWM job 3 — UniqueVisitApp: consumes dwd_page_log (the layer
@@ -724,13 +658,14 @@ def _build_warehouse_layers_impl(
     # The sentinel user's UV row (visit 2030) flows into the layer and
     # becomes the DWS watermark driver.
     # ------------------------------------------------------------------
-    page = _layer_stream(spark, layers["dwd_page_log"]).withWatermark(
+    page = _layer_stream(spark, layers["dwd_page_log"], ordered).withWatermark(
         "ts", "0 seconds"
     )
     _run(
         uv_dedup_stream(page, key="user_id"),
         layers["dwm_unique_visit"],
         ckpt("unique_visit_app"),
+        ordered,
     )
 
     # ------------------------------------------------------------------
@@ -740,13 +675,14 @@ def _build_warehouse_layers_impl(
     # row that cannot (nothing follows it), so the layer gets an
     # explicit far-future row appended instead.
     # ------------------------------------------------------------------
-    page = _layer_stream(spark, layers["dwd_page_log"]).withWatermark(
+    page = _layer_stream(spark, layers["dwd_page_log"], ordered).withWatermark(
         "ts", "0 seconds"
     )
     _run(
         jump_detect_stream(page, key="user_id", gap_ms=JUMP_GAP_MS),
         layers["dwm_user_jump"],
         ckpt("user_jump_app"),
+        ordered,
     )
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -770,7 +706,7 @@ def _build_warehouse_layers_impl(
             ),
             jump_sentinel,
         )
-        if _manifest_mode():
+        if ordered:
             # published AFTER every user_jump batch manifest, so the
             # far-future sentinel is the LAST batch consumers replay
             # (mtime-ordered) — exactly its watermark-driver role
@@ -785,7 +721,7 @@ def _build_warehouse_layers_impl(
     def fact_stream(table: str, key_ts: str, alias: str) -> DataFrame:
         schema = spark.read.parquet(layers[f"dwd_{table}"]).schema
         return (
-            _reader(spark, schema, layers[f"dwd_{table}"])
+            _reader(spark, schema, layers[f"dwd_{table}"], ordered)
             .drop("batch_id")
             .withColumn(f"{alias}_ts", ts_as_timestamp(schema, key_ts))
             .withWatermark(f"{alias}_ts", "0 seconds")
@@ -811,7 +747,7 @@ def _build_warehouse_layers_impl(
         F.round("o.o_totalprice", 2).alias("total_amount"),
         F.round("l.l_extendedprice", 2).alias("split_amount"),
     )
-    _run(wide, layers["dwm_order_wide"], ckpt("order_wide_app"))
+    _run(wide, layers["dwm_order_wide"], ckpt("order_wide_app"), ordered)
 
     # ------------------------------------------------------------------
     # DWM job 6 — PaymentWideApp: asymmetric band [-7d, +90d] (J2) over
@@ -838,7 +774,7 @@ def _build_warehouse_layers_impl(
             F.col("l.l_extendedprice") * (1 - F.col("l.l_discount")), 2
         ).alias("payment_amount"),
     )
-    _run(pay, layers["dwm_payment_wide"], ckpt("payment_wide_app"))
+    _run(pay, layers["dwm_payment_wide"], ckpt("payment_wide_app"), ordered)
 
     # ------------------------------------------------------------------
     # DWS job 7 — VisitorStatsApp: the U2 4-stream union consumed FROM
@@ -867,7 +803,7 @@ def _build_warehouse_layers_impl(
         }
         return project_to_skeleton(df, skeleton)
 
-    page = _layer_stream(spark, layers["dwd_page_log"]).withWatermark(
+    page = _layer_stream(spark, layers["dwd_page_log"], ordered).withWatermark(
         "ts", "0 seconds"
     )
     pv = skel(
@@ -879,11 +815,15 @@ def _build_warehouse_layers_impl(
         page.filter(F.col("event_type") == "signup"), sv_ct=F.lit(1)
     )
     uv = skel(
-        _layer_stream(spark, layers["dwm_unique_visit"], ts_col="first_ts"),
+        _layer_stream(
+            spark, layers["dwm_unique_visit"], ordered, ts_col="first_ts"
+        ),
         uv_ct=F.lit(1),
     )
     uj = skel(
-        _layer_stream(spark, layers["dwm_user_jump"], ts_col="jump_ts"),
+        _layer_stream(
+            spark, layers["dwm_user_jump"], ordered, ts_col="jump_ts"
+        ),
         uj_ct=F.lit(1),
     )
     vs = tumble_agg(
@@ -899,7 +839,7 @@ def _build_warehouse_layers_impl(
             dec_sum("dur").alias("dur_sum"),
         ],
     ).select("stt", "edt", "pv_ct", "uv_ct", "sv_ct", "uj_ct", "dur_sum")
-    _run(vs, layers["dws_visitor_stats"], ckpt("visitor_stats_app"))
+    _run(vs, layers["dws_visitor_stats"], ckpt("visitor_stats_app"), ordered)
 
     # ------------------------------------------------------------------
     # DWS job 8 — ProductStatsApp: the U1 7-branch union pipeline over
@@ -909,13 +849,14 @@ def _build_warehouse_layers_impl(
         product_stats_union_core,
     )
 
-    page = _layer_stream(spark, layers["dwd_page_log"]).withWatermark(
+    page = _layer_stream(spark, layers["dwd_page_log"], ordered).withWatermark(
         "ts", "0 seconds"
     )
     _run(
         product_stats_union_core(page),
         layers["dws_product_stats"],
         ckpt("product_stats_app"),
+        ordered,
     )
 
     # ------------------------------------------------------------------
@@ -926,7 +867,7 @@ def _build_warehouse_layers_impl(
     # ------------------------------------------------------------------
     oi_schema = spark.read.parquet(layers["dwd_order_info"]).schema
     oi = (
-        _reader(spark, oi_schema, layers["dwd_order_info"])
+        _reader(spark, oi_schema, layers["dwd_order_info"], ordered)
         .drop("batch_id")
         .withColumn("o_ts", ts_as_timestamp(oi_schema, "o_orderdate"))
         .withWatermark("o_ts", "0 seconds")
@@ -951,14 +892,19 @@ def _build_warehouse_layers_impl(
         GROUP BY window(o_ts, '1 day'), n.n_name
         """
     )
-    _run(province, layers["dws_province_stats"], ckpt("province_stats_app"))
+    _run(
+        province,
+        layers["dws_province_stats"],
+        ckpt("province_stats_app"),
+        ordered,
+    )
 
     # ------------------------------------------------------------------
     # DWS job 10 — KeywordStatsApp: view events from the page_log layer
     # joined to the search text, tokenizer explode ON THE STREAM, 10 s
     # tumble per keyword (KeywordStatsApp.java:56-88).
     # ------------------------------------------------------------------
-    page = _layer_stream(spark, layers["dwd_page_log"]).withWatermark(
+    page = _layer_stream(spark, layers["dwd_page_log"], ordered).withWatermark(
         "ts", "0 seconds"
     )
     docs = spark.read.parquet(
@@ -982,7 +928,7 @@ def _build_warehouse_layers_impl(
         keys=["keyword"],
         aggs=[F.count(F.lit(1)).alias("ct")],
     ).select("stt", "edt", "keyword", "ct", F.lit("SEARCH").alias("source"))
-    _run(kw, layers["dws_keyword_stats"], ckpt("keyword_stats_app"))
+    _run(kw, layers["dws_keyword_stats"], ckpt("keyword_stats_app"), ordered)
 
     return layers
 

@@ -425,10 +425,14 @@ def test_aqe_skew_join_split_engages(spark):
             "spark.sql.autoBroadcastJoinThreshold",
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+            "spark.sql.shuffle.partitions",
         )
     }
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        # the hot-partition arithmetic below assumes 8 shuffle
+        # partitions, whatever core count the session was built with
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         spark.conf.set(
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "64k",
@@ -439,7 +443,7 @@ def test_aqe_skew_join_split_engages(spark):
         # 50% of 400k fact rows on key 0, rest uniform over 20k keys;
         # multiple range partitions = multiple mapper blocks, which is
         # what AQE splits a skewed reduce partition by. 50% (not 30%):
-        # the test session shuffles into 8 partitions, so the hot
+        # the join shuffles into 8 partitions, so the hot
         # partition must clear 5x the median with only 8 buckets of
         # uniform residue around it
         big = spark.range(0, 400_000, 1, 8).selectExpr(
@@ -691,22 +695,26 @@ def test_light_media_entries_stay_unspread(spark, sf_dir):
         assert "Exchange" not in plan, f"{name} shuffles"
 
 
-def test_reliable_checkpoint_knob(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_CHECKPOINT=reliable swaps every lineage cut from
+def test_reliable_checkpoint_knob(spark, sf_dir, monkeypatch, tmp_path):
+    """SPARK_GRAFT_CHECKPOINT_DIR swaps every lineage cut from
     executor-local localCheckpoint (fast; NOT fault-tolerant — a lost
-    executor kills the job) to a reliable checkpoint() into a
-    fault-tolerant directory (operators/lineage.cut_lineage, the
-    production-posture knob). The two forms must be row-identical;
-    doc_dsir_select exercises a lazy cut (pb feeds three consumers)
-    end to end."""
+    executor kills the job) to a reliable checkpoint() into that
+    shared directory (operators/lineage.cut_lineage, the
+    production-posture setting). The two forms must be row-identical,
+    and the cut data must land in the named directory; doc_dsir_select
+    exercises a lazy cut (pb feeds three consumers) end to end."""
+    import os
+
     from gmall_realtime_flink_spark.plans import REGISTRY
 
     builder = REGISTRY["doc_dsir_select"].builder
     base = sorted(map(tuple, builder(spark, sf_dir).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT", "reliable")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path))
     rel = sorted(map(tuple, builder(spark, sf_dir).collect()))
-    assert spark.sparkContext.getCheckpointDir() is not None, (
-        "reliable mode must set a checkpoint dir"
+    ckpt_dir = spark.sparkContext.getCheckpointDir()
+    assert ckpt_dir is not None and str(tmp_path) in ckpt_dir, ckpt_dir
+    assert any(files for _, _, files in os.walk(tmp_path)), (
+        "reliable cut wrote nothing under the checkpoint dir"
     )
     assert rel == base
 

@@ -173,65 +173,57 @@ def test_topology_rerun_is_idempotent(spark, sf_dir, layers):
     assert after == before
 
 
-def test_topology_crash_between_write_and_commit(spark, sf_dir, layers):
+@pytest.mark.parametrize(
+    "ordered_slices, crash_layer, crash_at",
+    [(0, "dwm_order_wide", 1), (4, "dwm_unique_visit", 2)],
+    ids=["bulk", "ordered"],
+)
+def test_topology_crash_between_write_and_commit(
+    spark, sf_dir, tmp_path, ordered_slices, crash_layer, crash_at
+):
     """Crash-inject the WHOLE DAG at its weakest point: a layer job is
     killed after its parquet data committed but before the streaming
     checkpoint committed the source offset (the at-least-once window).
     On restart the micro-batch is replayed; the batch_id-partition
     dynamic overwrite must replace the orphaned data instead of
     appending a duplicate, and every downstream layer must come out
-    identical to a clean run — the whole-topology effectively-once
-    claim, previously only tested per-sink and for clean restarts."""
-    import tempfile
-
-    dws = (
-        "dws_visitor_stats",
-        "dws_product_stats",
-        "dws_province_stats",
-        "dws_keyword_stats",
-    )
-
-    def dws_rows(layer_dirs):
-        return {
-            layer: sorted(
-                map(
-                    tuple,
-                    spark.read.parquet(layer_dirs[layer])
-                    .drop("batch_id")
-                    .collect(),
-                )
-            )
-            for layer in dws
-        }
-
-    want = dws_rows(layers)  # clean-run reference from the fixture
-
-    base = tempfile.mkdtemp(prefix="warehouse_crash_")
-    state = {"detonated": False}
+    identical to the batch forms — the whole-topology effectively-once
+    claim, previously only tested per-sink and for clean restarts. In
+    ordered replay the killed batch's manifest is already published
+    and names files the replay's overwrite deletes, so the replay must
+    rewrite it: the crashed layer there is one a DWS job consumes."""
+    base = str(tmp_path)
+    writes = {"n": 0}
 
     def bomb(out_dir, batch_id):
-        # detonate ONCE, on the first order_wide batch: the data for
-        # this batch is already durable in the layer; raising before
-        # foreachBatch returns means its offset is never committed
-        if not state["detonated"] and out_dir.endswith("dwm_order_wide"):
-            state["detonated"] = True
-            raise RuntimeError(
-                "injected crash between parquet write and offset commit"
-            )
+        # detonate ONCE, on the crash_at-th batch of crash_layer: the
+        # data for this batch is already durable in the layer; raising
+        # before foreachBatch returns means its offset is never
+        # committed
+        if out_dir.endswith(crash_layer):
+            writes["n"] += 1
+            if writes["n"] == crash_at:
+                raise RuntimeError(
+                    "injected crash between parquet write and offset commit"
+                )
 
     tp.FAULT_AFTER_WRITE = bomb
     try:
         with pytest.raises(Exception):
-            tp.build_warehouse_layers(spark, sf_dir, base=base)
+            tp.build_warehouse_layers(
+                spark, sf_dir, base=base, ordered_slices=ordered_slices
+            )
     finally:
         tp.FAULT_AFTER_WRITE = None
-    assert state["detonated"], "fault hook never fired"
+    assert writes["n"] == crash_at, "fault hook never fired"
 
     # restart the DAG against the same base: completed jobs find no new
     # input; the killed job replays its uncommitted batch over its own
     # partition; downstream jobs then run for the first time
-    layers2 = tp.build_warehouse_layers(spark, sf_dir, base=base)
-    assert dws_rows(layers2) == want
+    layers = tp.build_warehouse_layers(
+        spark, sf_dir, base=base, ordered_slices=ordered_slices
+    )
+    _assert_dws_match_batch(spark, sf_dir, layers)
 
 
 def test_layer_batch_latency_percentiles_captured(spark, sf_dir, layers):
@@ -260,30 +252,20 @@ def test_layer_batch_latency_percentiles_captured(spark, sf_dir, layers):
 
 
 def test_topology_ordered_manifest_mode_matches_batch(
-    spark, sf_dir, monkeypatch, tmp_path
+    spark, sf_dir, tmp_path
 ):
-    """The ordered-manifest contract (VERDICT r12 item 3): writers keep
-    full task parallelism (multi-file batch partitions) and publish
-    per-batch ordered manifests; consumers trigger one whole batch at
-    a time in batch order. The DWS outputs must equal the batch
-    registry forms bit-for-bit — the same equality the legacy
-    one-file-per-batch contract guaranteed, now without the
-    single-task parquet-encode tail."""
+    """Ordered replay: writers keep full task parallelism (multi-file
+    batch partitions) and publish per-batch ordered manifests;
+    consumers trigger one whole batch at a time in batch order. The
+    DWS outputs must equal the batch registry forms bit-for-bit."""
     import os
 
-    from gmall_realtime_flink_spark.streaming.jobs import SENTINEL_CUTOFF
-
-    monkeypatch.setenv("SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER", "1")
-    monkeypatch.setenv("SPARK_GRAFT_TOPOLOGY_ORDERED_SLICES", "4")
-    monkeypatch.setenv("SPARK_GRAFT_TOPOLOGY_MANIFESTS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_TOPOLOGY_WRITER_TASKS", "4")
-    base = tmp_path / "wh"
-    base.mkdir()
-    layers = tp.build_warehouse_layers(spark, sf_dir, base=str(base))
+    layers = tp.build_warehouse_layers(
+        spark, sf_dir, base=str(tmp_path), ordered_slices=4
+    )
 
     # every layer carries manifests, and at least one batch partition
-    # really is multi-file (the parallelism the manifest unlocks —
-    # under the legacy contract this would corrupt the replay)
+    # really is multi-file (the parallelism the manifest unlocks)
     multi = 0
     for d in layers.values():
         assert os.path.isdir(os.path.join(d, "_manifests")), d
@@ -294,7 +276,13 @@ def test_topology_ordered_manifest_mode_matches_batch(
                     if f.endswith(".parquet")
                 ])
                 multi = max(multi, n)
-    assert multi > 1, "no multi-file batch partition — knob inert?"
+    assert multi > 1, "no multi-file batch partition — ordered mode inert?"
+
+    _assert_dws_match_batch(spark, sf_dir, layers)
+
+
+def _assert_dws_match_batch(spark, sf_dir, layers):
+    from gmall_realtime_flink_spark.streaming.jobs import SENTINEL_CUTOFF
 
     for layer, batch_name in [
         ("dws_visitor_stats", "visitor_stats_union"),

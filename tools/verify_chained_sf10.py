@@ -2,16 +2,13 @@
 session (RocksDB state), recording per-layer seconds, per-batch
 trigger-latency percentiles, and state/checkpoint sizes.
 
-First used round-7 (VERIFY_SF10_CHAINED_r07.json, default staging).
-Round-11 runs it twice at sf10 for the ordered-ingestion proof
-(VERDICT r10 item 1): once with default staging (the refreshed
-unordered baseline, now WITH the r8 latency listener so p95 exists),
-once under SPARK_GRAFT_TOPOLOGY_ORDERED_SLICES=8 +
-SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER=1 (the per-key-ordered Kafka
-contract, r9's 1.6x/6.6x sf1 lever, one decade up). The staging knobs
-are recorded in the artifact so the two runs are self-describing.
+The replay shape is the third argument, passed to
+`build_warehouse_layers` as `ordered_slices`: 0 (the default) is the
+bulk replay, N>0 the ordered replay over N time-sorted fact slices
+(the per-key-ordered Kafka contract). It is recorded in the
+artifact's `staging` block, so runs are self-describing.
 
-Usage: python tools/verify_chained_sf10.py [sf_dir] [json_out]
+Usage: python tools/verify_chained_sf10.py [sf_dir] [json_out] [ordered_slices]
 """
 from __future__ import annotations
 
@@ -44,6 +41,7 @@ def main() -> int:
     # neutral default (ADVICE r11): an argless run must never clobber
     # a committed per-round artifact — name the round explicitly
     json_out = sys.argv[2] if len(sys.argv) > 2 else "VERIFY_SF10_CHAINED.json"
+    ordered_slices = int(sys.argv[3]) if len(sys.argv) > 3 else 0
     spark = get_spark("verify_chained_sf10")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -56,6 +54,12 @@ def main() -> int:
         )
     bad, results = [], {}
     t_all = time.time()
+    # the chained entries read the layers from this cache
+    topology._LAYER_CACHE[os.path.abspath(sf_dir)] = (
+        topology.build_warehouse_layers(
+            spark, sf_dir, ordered_slices=ordered_slices
+        )
+    )
     for q in NAMES:
         t0 = time.time()
         try:
@@ -69,8 +73,7 @@ def main() -> int:
             bad.append(q)
         results[q] = {"ok": ok, "sec": round(time.time() - t0, 1)}
         print(f"{q} {'OK' if ok else 'BAD'} {time.time() - t0:.1f}s", flush=True)
-        # layer seconds are known after the first entry (shared cache)
-        _dump(json_out, sf_dir, bad, results, topology, t_all)
+        _dump(json_out, sf_dir, ordered_slices, bad, results, topology, t_all)
     # drop the warehouse base + ODS staging: a sf10 run leaves ~16 GB
     # under /tmp otherwise (two leaked runs nearly filled the disk in
     # r12 — the same hygiene failure that ENOSPC'd the r11 sf100 tier)
@@ -91,7 +94,7 @@ def main() -> int:
     return 1 if bad else 0
 
 
-def _dump(json_out, sf_dir, bad, results, topology, t_all):
+def _dump(json_out, sf_dir, ordered_slices, bad, results, topology, t_all):
     base = None
     for key, layers in topology._LAYER_CACHE.items():
         if key == os.path.abspath(sf_dir):
@@ -112,14 +115,7 @@ def _dump(json_out, sf_dir, bad, results, topology, t_all):
             {
                 "sf_dir": sf_dir,
                 "session": "engine (RocksDB state store)",
-                "staging": {
-                    "ordered_slices": os.environ.get(
-                        "SPARK_GRAFT_TOPOLOGY_ORDERED_SLICES"
-                    ),
-                    "files_per_trigger": os.environ.get(
-                        "SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER"
-                    ),
-                },
+                "staging": {"ordered_slices": ordered_slices},
                 "bad": bad,
                 "results": results,
                 "layer_seconds": topology.LAYER_SECONDS,
